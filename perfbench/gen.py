@@ -43,22 +43,28 @@ FCST_FILES = 4
 
 class WeatherGen:
     """SELECTs producing the bronze tables of one seed; column order and
-    types follow ``plans/schemas.py``."""
+    types follow ``plans/schemas.py``. ``geo_seed`` (default: ``seed``)
+    places the stations, so observation hours of a new seed can extend a
+    bronze dir made with another."""
 
-    def __init__(self, seed: int, n_stations: int, n_postal: int):
+    def __init__(self, seed: int, n_stations: int, n_postal: int,
+                 geo_seed: int | None = None):
         self.seed = seed
+        self.geo_seed = seed if geo_seed is None else geo_seed
         self.n_stations = n_stations
         self.n_postal = n_postal
 
-    def _u(self, salt: str, key: str = "id") -> str:
-        return f"({hash_uniform_sql(key, f'{self.seed}:{salt}')})"
+    def _u(self, salt: str, key: str = "id", seed: int | None = None) -> str:
+        seed = self.seed if seed is None else seed
+        return f"({hash_uniform_sql(key, f'{seed}:{salt}')})"
 
     def _ts(self, hours: str) -> str:
         return f"(TIMESTAMP '{BASE_TS}' + to_hours(CAST({hours} AS BIGINT)))"
 
     def _located(self) -> str:
-        return (f"{LAT0} + {LAT_SPAN} * {self._u('slat', 'sid')} AS latitude, "
-                f"{LON0} + {LON_SPAN} * {self._u('slon', 'sid')} AS longitude")
+        g = self.geo_seed
+        return (f"{LAT0} + {LAT_SPAN} * {self._u('slat', 'sid', g)} AS latitude, "
+                f"{LON0} + {LON_SPAN} * {self._u('slon', 'sid', g)} AS longitude")
 
     def stations(self) -> str:
         null = f"{self._u('snull')} < 0.01"
@@ -169,10 +175,12 @@ def write_weather_dir(dst: str, seed: int, n_stations: int, days: int,
 
 
 def write_observation_hours(dst: str, seed: int, n_stations: int,
-                            hour_lo: int, hour_hi: int) -> list[str]:
+                            hour_lo: int, hour_hi: int,
+                            geo_seed: int | None = None) -> list[str]:
     """One file per hour in [hour_lo, hour_hi): each is what one ingest
-    run appends to the observations table."""
-    g = WeatherGen(seed, n_stations, 0)
+    run appends to the observations table of a bronze dir whose stations
+    were placed by ``geo_seed``."""
+    g = WeatherGen(seed, n_stations, 0, geo_seed)
     os.makedirs(dst, exist_ok=True)
     con = duckdb.connect()
     paths = []

@@ -3,24 +3,27 @@
     python3 perfbench/run.py --workload serve --seed 1 --seconds 10 --trace 0
 
 BENCHMARK.json lists the workloads performance is compared on, ``serve``
-and ``hourly_upsert``, and the metrics a run reports. ``backfill`` and
-``catalog_leads`` (workloads.py) run the same way but are not listed: a
-run of either takes minutes of warm work, more than a comparison that
-repeats each workload a few dozen times can afford.
+and ``hourly_upsert``, and the metrics a run reports. ``catalog_leads``
+(workloads.py) runs the same way but is not listed: its cold warm pass
+alone takes about 20 s, and a third workload does not fit the time a
+comparison that repeats each workload a few dozen times can spend.
 
-A run makes its inputs from ``--seed``, sets up (session start, input
-load, one warm pass) several times and reports the median, runs
-operations back to back for ``--seconds`` (and at least MIN_OPS of
-them), then checks the outputs outside the timed region. ``--trace 1``
-runs half the time untraced and half traced, and reports the per-layer
-metrics, with the tracing overhead, instead of the end-to-end ones.
+A run makes its inputs from ``--seed``, then sets up: session start and
+input load, several times, each in a fresh JVM, then one warm pass in
+the last of them; ``setup_s`` is the median start-and-load plus the warm
+pass. In that JVM it runs, back to back, the operations a workload's
+nominal rate fits in ``--seconds`` (at least MIN_OPS), then checks the
+outputs outside the timed region. ``--trace 1`` traces every other
+operation and reports the per-layer metrics, with the tracing overhead,
+instead of the end-to-end ones.
 
 Every line but the last is a human-readable report: the environment
 (cores, seed, input sizes), each check, and each metric with its unit
 and sample count. The last line is one JSON object with ``correct``,
 ``attempted``, ``failed`` and ``metrics``. The run exits non-zero if a
 check fails or the engine's sources are missing. Everything it writes
-stays under ``perfbench/_work/``.
+stays under ``perfbench/_work/``; the weather history, which depends
+only on the code, is kept there for the next run.
 """
 
 from __future__ import annotations
@@ -34,11 +37,12 @@ import subprocess
 import sys
 import time
 import traceback
+from contextlib import contextmanager, nullcontext
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUP_REPS = 2
-MIN_OPS = 3
+MIN_OPS = 4
 
 
 def _log(msg: str) -> None:
@@ -72,7 +76,6 @@ def _pin_environment(work: str) -> int:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "local")
     os.environ["TMPDIR"] = tmp
     # the launcher JVM that spark-submit starts first would write /tmp
@@ -139,27 +142,37 @@ def _quantile(xs: list[float], q: float) -> float:
     return statistics.quantiles(xs, n=100, method="inclusive")[round(q * 100) - 1]
 
 
-def _measure(wl, spark, seconds: float, cpu_fn, results: list) -> None:
-    """Run operations back to back (a closed loop) for ``seconds``, and at
-    least MIN_OPS of them. Records (ok, wall, cpu) per operation; a
-    negative process-tree CPU delta is a measurement failure, kept as
-    None (a descendant that exited took its CPU with it)."""
-    t_end = time.perf_counter() + seconds
+def _measure(wl, spark, n_ops: int, cpu_fn, untraced: list,
+             traced: list | None = None) -> None:
+    """Run ``n_ops`` operations back to back (a closed loop). Records (ok,
+    wall, cpu) per operation; a negative process-tree CPU delta is a
+    measurement failure, kept as None (a descendant that exited took its
+    CPU with it). Given a ``traced`` list, every other operation is
+    traced, ``n_ops`` of each, so traced and untraced operations see the
+    same warm-up."""
     n = 0
-    while n < MIN_OPS or time.perf_counter() < t_end:
+    while len(untraced) < n_ops or (traced is not None and len(traced) < n_ops):
+        trace = traced is not None and n % 2 == 1
         c0 = cpu_fn()
         t0 = time.perf_counter()
         ok = True
         try:
-            wl.op(spark)
+            wl.t.enabled = trace
+            with wl.traced() if trace else nullcontext():
+                wl.op(spark)
         except Exception:  # noqa: BLE001 — a failed operation is counted
             ok = False
             _log(f"{wl.name} operation failed:\n{traceback.format_exc()}")
+        finally:
+            wl.t.enabled = False
         wall = time.perf_counter() - t0
         cpu = cpu_fn() - c0
         wl.layers.release()
-        results.append((ok, wall, cpu if cpu >= 0 else None))
+        (traced if trace else untraced).append(
+            (ok, wall, cpu if cpu >= 0 else None))
         n += 1
+    _log(f"op walls: untraced {[round(w, 3) for _, w, _ in untraced]}"
+         + (f", traced {[round(w, 3) for _, w, _ in traced]}" if traced else ""))
 
 
 def main(argv=None) -> int:
@@ -190,45 +203,55 @@ def main(argv=None) -> int:
         _log(f"unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}")
         return 2
     trace = bool(args.trace)
+    # set-up passes are not traced operations
     tracer = Tracer(run_id=f"{args.workload}-{args.seed}-{os.getpid()}",
-                    enabled=trace)
+                    enabled=False)
     wl = WORKLOADS[args.workload](work, args.seed, args.seconds, tracer)
+
+    @contextmanager
+    def private_session():
+        spark = _start_session(work, False)
+        try:
+            yield spark
+        finally:
+            _stop_jvm(spark)
 
     spark = None
     try:
-        setup, session_s = [], []
+        t0 = time.perf_counter()
+        wl.prepare(private_session)  # inputs, not set-up
+        _log(f"prepare: {time.perf_counter() - t0:.2f} s")
+        # Each set-up repeat is a fresh JVM (session start and input load);
+        # the warm pass, the first pass through the engine in the last of
+        # those JVMs, runs once: a second cold pass per run costs more time
+        # than the comparison's budget has.
+        starts, session_s = [], []
         for rep in range(SETUP_REPS):
             if spark is not None:
                 tracer.sc = None
-                spark.stop()
+                _stop_jvm(spark)
             t0 = time.perf_counter()
-            with tracer.span("session.start"):
-                spark = _start_session(work, trace)
+            spark = _start_session(work, trace)
             tracer.sc = spark.sparkContext
             t1 = time.perf_counter()
-            if rep == 0:
-                wl.prepare(spark)  # inputs from the seed, not set-up
-                _log(f"prepare: {time.perf_counter() - t1:.2f} s")
-            t2 = time.perf_counter()
-            tracer.enabled = False  # set-up passes are not traced operations
             wl.load(spark)
-            wl.warm(spark)
-            wl.layers.release()
-            tracer.enabled = trace
-            setup.append(time.perf_counter() - t2 + (t1 - t0))
+            starts.append(time.perf_counter() - t0)
             session_s.append(t1 - t0)
             _log(f"setup {rep}: session {t1 - t0:.2f} s, "
-                 f"load+warm {time.perf_counter() - t2:.2f} s")
+                 f"load {time.perf_counter() - t1:.2f} s")
+        t0 = time.perf_counter()
+        wl.warm(spark)
+        wl.layers.release()
+        warm_s = time.perf_counter() - t0
+        _log(f"warm pass: {warm_s:.2f} s")
 
         untraced, traced = [], []
-        tracer.enabled = False
-        if trace:
-            _measure(wl, spark, args.seconds / 2, _tree_cpu_seconds, untraced)
-            tracer.enabled = True
-            with wl.layers.installed():
-                _measure(wl, spark, args.seconds / 2, _tree_cpu_seconds, traced)
-        else:
-            _measure(wl, spark, args.seconds, _tree_cpu_seconds, untraced)
+        # a count fixed by --seconds, not by the host's speed: latency
+        # still falls as the JVM warms, so a faster host measuring more
+        # operations would also measure warmer ones
+        n_ops = max(MIN_OPS, round(args.seconds * wl.rate))
+        _measure(wl, spark, n_ops, _tree_cpu_seconds, untraced,
+                 traced if trace else None)
         ops = untraced + traced
         t3 = time.perf_counter()
         wl.check(spark)
@@ -254,7 +277,9 @@ def main(argv=None) -> int:
         return 1
 
     e2e = {
-        "setup_s": (statistics.median(setup), "s", f"n={len(setup)}"),
+        "setup_s": (statistics.median(starts) + warm_s, "s",
+                    f"median of n={len(starts)} session start + input load, "
+                    f"each in a fresh JVM, plus one warm pass"),
         "op_p50_ms": (statistics.median(walls) * 1e3, "ms", f"n={len(walls)}"),
         "op_cpu_ms": (statistics.median(cpus) * 1e3 if cpus else float("nan"),
                       "ms", f"n={len(cpus)}"),
@@ -298,7 +323,6 @@ def main(argv=None) -> int:
 
 # workload -> the names its operation's wall and CPU are reported under
 _OP_NAMES = {
-    "backfill": ("backfill_s", "backfill_cpu_s"),
     "serve": ("serve_p50_ms", None),
     "hourly_upsert": ("tick_p50_s", "tick_cpu_s"),
     "catalog_leads": ("catalog_s", "catalog_cpu_s"),

@@ -1,12 +1,12 @@
-"""The four workloads: what each sets up, what one measured operation is,
+"""The workloads: what each sets up, what one measured operation is,
 how its outputs are checked, and which per-layer metrics its traced run
 reports.
 
 A workload's life in one run: ``prepare`` makes its inputs from the seed
-(not timed); ``load`` and ``warm`` are the timed set-up, repeated after
-each session restart; ``op`` is one measured operation; ``check`` runs
-outside the timed region; ``layer_metrics`` reads the spans and Spark
-counters of the traced operations.
+(not timed); ``load`` (repeated, each time in a fresh JVM) and ``warm``
+(once, in the last of them) are the timed set-up; ``op`` is one measured
+operation; ``check`` runs outside the timed region; ``layer_metrics``
+reads the spans and Spark counters of the traced operations.
 """
 
 from __future__ import annotations
@@ -21,7 +21,8 @@ import os
 import random
 import shutil
 import statistics
-from contextlib import contextmanager, nullcontext
+import time
+from contextlib import contextmanager
 
 import duckdb
 from pyspark.sql import functions as F
@@ -29,9 +30,9 @@ from pyspark.sql import functions as F
 import gen
 from spans import Tracer, merge_stats, task_max_over_median
 
+from weather_data_pipeline_sv_spark.api import app as app_module
 from weather_data_pipeline_sv_spark.api.app import create_app
 from weather_data_pipeline_sv_spark.plans import pipeline as pl
-from weather_data_pipeline_sv_spark.plans import queries as q
 from weather_data_pipeline_sv_spark.plans import schemas
 from weather_data_pipeline_sv_spark.plans.pipeline import GOLD_KEYS, run_transform
 from weather_data_pipeline_sv_spark.plans.scheduler import CronSchedule, Job, Scheduler
@@ -40,24 +41,11 @@ from weather_data_pipeline_sv_spark.sources.testdata import load_tables
 from weather_data_pipeline_sv_spark.streaming.jobs import incremental_batch_run
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_work", "cache")
 
-# Input sizes, fixed for every seed.
-N_STATIONS = 50
-DAYS = 9
-N_POSTAL = 80
 OBS_LOOKBACK_H, FCST_LOOKBACK_H = 168, 48  # the reference DAG's windows
 TICK_LOOKBACK_H = 6
 TRANSFORM_CRON = "30 * * * *"  # the reference transform DAG's schedule
-CATALOG_LEADS = (
-    "pipe5_quantizer_retrain", "t16_bpe_train", "t29_hybrid_rrf_served",
-    "t26_incremental_bm25", "pipe7_retrieval_decontaminate",
-    "pipe3_incremental_corpus",
-)
-
-# Serve clock: six hours after the last forecast issue, so the history,
-# latest and forecast routes all have rows (at the last generated hour
-# the generated forecast targets are already past).
-ASOF = gen.BASE + dt.timedelta(hours=(DAYS - 1) * 24 + 6)
 GOLD_COLS = [
     f.name for f in schemas.ANALYTICS_WEATHER_BY_POSTAL_CODE.fields
     if f.name not in ("interpolated_fields", "created_at", "updated_at")
@@ -203,6 +191,7 @@ class _Layers:
 class Workload:
     name = ""
     op_name = ""
+    rate: float  # nominal operations per second: sets how many a run measures
 
     def __init__(self, work: str, seed: int, seconds: int, tracer: Tracer):
         self.work, self.seed, self.seconds, self.t = work, seed, seconds, tracer
@@ -213,13 +202,20 @@ class Workload:
         self.sizes: dict = {}
 
     # hooks --------------------------------------------------------------
-    def prepare(self, spark) -> None: ...
+    def prepare(self, session) -> None:
+        """Inputs from the seed. ``session()`` is a context manager giving
+        a SparkSession in a JVM of its own, stopped on exit, for inputs
+        only the engine can make."""
     def load(self, spark) -> None: ...
     def warm(self, spark) -> None: self.op(spark)
     def op(self, spark): raise NotImplementedError
     def check(self, spark) -> None: ...
     def report(self) -> dict: return {}
     def layer_metrics(self, groups: dict) -> dict: return {}
+
+    def traced(self):
+        """Context in which the traced operations run."""
+        return self.layers.installed()
 
     # helpers ------------------------------------------------------------
     def record(self, name: str, ok: bool, detail: str = "") -> None:
@@ -270,49 +266,131 @@ class Workload:
                 [task_max_over_median(s) for s in per_op]),
         }
 
-class _Weather(Workload):
-    """Shared bronze/gold plumbing of the weather workloads."""
 
+class _Weather(Workload):
+    """Shared bronze/gold plumbing of the weather workloads.
+
+    Both run at the shape of the repo's ``data_wx1`` dir: 100 stations, 90
+    days, 900 postal codes. Their history (bronze made from DATA_SEED, and
+    the first load of gold, about 189k rows in 8 date partitions) is built
+    by the engine once per checkout, in a JVM of its own, checked against
+    the oracle, and kept under ``_work/cache``: a cold first load at this
+    shape takes longer than a run can spend. The run's seed draws what
+    the workload adds to it.
+    """
+
+    n_stations, n_days, n_postal = 100, 90, 900
+    DATA_SEED = 1
+    bronze = lake = ""
     pairs: list
 
-    def prepare(self, spark) -> None:
-        self.bronze = os.path.join(self.work, "bronze")
-        self.lake = os.path.join(self.work, "lake")
-        meta = gen.write_weather_dir(self.bronze, self.seed, N_STATIONS,
-                                     DAYS, N_POSTAL)
-        con = self.duck_bronze()
+    def use_history(self, session) -> dict:
+        """Point ``bronze`` and ``lake`` at the cached history, building
+        it first if this checkout has none; returns its meta."""
+        self.pairs = []
+        key = (f"wx-{self.n_stations}x{self.n_days}x{self.n_postal}"
+               f"-seed{self.DATA_SEED}")
+        cache = os.path.join(CACHE, key)
+        if not os.path.isfile(os.path.join(cache, "meta.json")):
+            cache = self.build_history(session, cache)
+        self.bronze = os.path.join(cache, "bronze")
+        self.lake = cache
+        with open(os.path.join(cache, "meta.json")) as f:
+            return json.load(f)
+
+    def build_history(self, session, dst: str) -> str:
+        """Bronze from DATA_SEED and the first load of gold by the engine,
+        checked against the oracle. Moved to ``dst`` only if the check
+        passes; returns where it is."""
+        tmp = f"{dst}.tmp-{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        bronze = os.path.join(tmp, "bronze")
+        meta = self.make_bronze(bronze, self.DATA_SEED)
+        meta["data_seed"] = meta.pop("seed")
+        t0 = time.perf_counter()
+        with session() as spark:
+            res, meta["write_table_s"] = self.build_gold(
+                spark, self.read_bronze(spark, bronze), tmp)
+        meta["first_load_s"] = time.perf_counter() - t0
+        con = self.duck_bronze(bronze)
+        self.check_first_load(con, tmp, res.temporal_issues, "history")
+        con.close()
+        self.lake = tmp
+        meta["first_load_rows"] = self.gold_stats()["rows"]
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump(meta, f)
+        if not all(ok for _, ok, _ in self.checks):
+            return tmp  # use it for this run, cache nothing
+        try:
+            os.rename(tmp, dst)
+        except OSError:  # another run cached it first
+            shutil.rmtree(tmp, ignore_errors=True)
+        return dst
+
+    @property
+    def asof(self) -> dt.datetime:
+        """Six hours after the last forecast issue, so the history, latest
+        and forecast routes all have rows (at the last generated hour the
+        generated forecast targets are already past)."""
+        return gen.BASE + dt.timedelta(hours=(self.n_days - 1) * 24 + 6)
+
+    def make_bronze(self, dst: str, seed: int) -> dict:
+        meta = gen.write_weather_dir(dst, seed, self.n_stations, self.n_days,
+                                     self.n_postal)
+        con = self.duck_bronze(dst)
         meta["bronze_rows"] = {n: con.execute(f"SELECT count(*) FROM {n}")
                                .fetchone()[0] for n, _ in _TABLES}
         con.close()
-        self.sizes.update(meta)
-        self.pairs = []
+        return meta
 
-    def read_bronze(self, spark) -> dict:
-        return {n: spark.read.schema(s).parquet(f"{self.bronze}/{n}.parquet")
+    @staticmethod
+    def read_bronze(spark, bronze: str) -> dict:
+        return {n: spark.read.schema(s).parquet(f"{bronze}/{n}.parquet")
                 for n, s in _TABLES}
 
-    def load(self, spark) -> None:
-        self.tb = self.read_bronze(spark)
-
-    def transform(self, spark, obs, fcst, asof, obs_h, fcst_h):
+    def transform(self, spark, tb, obs, fcst, asof, obs_h, fcst_h):
         with self.t.span("pipeline.run_transform"):
-            res = run_transform(obs, fcst, self.tb["weather_stations"],
-                                self.tb["postal_codes"], asof,
+            res = run_transform(obs, fcst, tb["weather_stations"],
+                                tb["postal_codes"], asof,
                                 obs_lookback_hours=obs_h,
                                 fcst_lookback_hours=fcst_h)
         return res
 
-    def gold_path(self) -> str:
-        return writers.table_path(self.lake, "gold", "weather")
-
-    def build_gold(self, spark):
-        res = self.transform(spark, self.tb["raw_weather_observations"],
-                             self.tb["raw_weather_forecasts"], ASOF,
+    def build_gold(self, spark, tb: dict, lake: str):
+        """First load: run_transform at the reference DAG's windows, then
+        date-partitioned gold via write_table. Returns the transform's
+        result and the seconds write_table took."""
+        res = self.transform(spark, tb, tb["raw_weather_observations"],
+                             tb["raw_weather_forecasts"], self.asof,
                              OBS_LOOKBACK_H, FCST_LOOKBACK_H)
+        t0 = time.perf_counter()
         with self.t.span("writers.write_table"):
-            writers.write_table(res.gold, self.lake, "gold", "weather",
+            writers.write_table(res.gold, lake, "gold", "weather",
                                 partition_by_date_of="timestamp")
-        return res
+        return res, time.perf_counter() - t0
+
+    def gold_path(self, lake: str | None = None) -> str:
+        return writers.table_path(lake or self.lake, "gold", "weather")
+
+    def check_first_load(self, con, lake: str, issues: int,
+                         prefix: str) -> None:
+        """Gold of a first load and the transform's temporal-issue count
+        against the oracle over the bronze views of ``con``."""
+        oracle = _oracle_module()
+        want = []
+        for data_type, h in (("observation", OBS_LOOKBACK_H),
+                             ("forecast", FCST_LOOKBACK_H)):
+            want += con.execute(oracle.gold_oracle_sql(data_type, self.asof, h)
+                                ).fetchall()
+        got = con.execute(f"SELECT {', '.join(GOLD_COLS)} FROM "
+                          f"{_parquet_glob(self.gold_path(lake))}").fetchall()
+        dg, dw = _digest(got), _digest(want)
+        self.record(f"{prefix}.gold_vs_oracle", dg == dw and dw[0] > 0,
+                    f"gold {dg[0]} rows, oracle {dw[0]} rows")
+        n = con.execute(oracle.temporal_issue_count_sql(self.asof, 24)
+                        ).fetchone()[0]
+        self.record(f"{prefix}.temporal_issues_vs_oracle", n == issues,
+                    f"spark {issues}, oracle {n}")
 
     def transform_metrics(self, groups) -> dict:
         """cleaning / aggregation / pipeline metrics of run_transform."""
@@ -344,11 +422,12 @@ class _Weather(Workload):
                                             "jobs", own_only=True),
         }
 
-    def duck_bronze(self) -> duckdb.DuckDBPyConnection:
+    @staticmethod
+    def duck_bronze(bronze: str):
         con = _duck()
         for n, _ in _TABLES:
             con.execute(f"CREATE VIEW {n} AS SELECT * FROM "
-                        f"{_parquet_glob(self.bronze + '/' + n + '.parquet')}")
+                        f"{_parquet_glob(bronze + '/' + n + '.parquet')}")
         return con
 
     def gold_pairs(self, con, where: str = "TRUE") -> int:
@@ -369,77 +448,29 @@ class _Weather(Workload):
                 "bytes_per_row": size / rows if rows else 0.0}
 
 
-class Backfill(_Weather):
-    """First-load run_transform at the reference DAG's windows, from the
-    bronze dir to date-partitioned gold via write_table."""
-
-    name = op_name = "backfill"
-
-    def op(self, spark):
-        with self.t.span(self.op_name):
-            t0 = dt.datetime.now().timestamp()
-            res = self.build_gold(spark)
-            self.last_issues = res.temporal_issues
-            if self.t.enabled:
-                new = [f for f in _dir_files(self.gold_path()) if f[2] >= t0]
-                self.written.append((len(new), sum(f[1] for f in new)))
-
-    def load(self, spark) -> None:
-        super().load(spark)
-        self.written = []
-
-    def check(self, spark) -> None:
-        oracle = _oracle_module()
-        con = self.duck_bronze()
-        want = []
-        for data_type, h in (("observation", OBS_LOOKBACK_H),
-                             ("forecast", FCST_LOOKBACK_H)):
-            want += con.execute(oracle.gold_oracle_sql(data_type, ASOF, h)
-                                ).fetchall()
-        got = con.execute(f"SELECT {', '.join(GOLD_COLS)} FROM "
-                          f"{_parquet_glob(self.gold_path())}").fetchall()
-        dg, dw = _digest(got), _digest(want)
-        self.record("backfill.gold_vs_oracle", dg == dw and dw[0] > 0,
-                    f"gold {dg[0]} rows, oracle {dw[0]} rows")
-        n = con.execute(oracle.temporal_issue_count_sql(ASOF, 24)).fetchone()[0]
-        self.record("backfill.temporal_issues_vs_oracle", n == self.last_issues,
-                    f"spark {self.last_issues}, oracle {n}")
-        self.pairs.append(self.gold_pairs(con))
-        con.close()
-        self.gold = self.gold_stats()
-
-    def report(self) -> dict:
-        return {"gold_bytes_per_row": (self.gold["bytes_per_row"], "bytes")}
-
-    def layer_metrics(self, groups) -> dict:
-        m = self.transform_metrics(groups)
-        m.update({
-            "writers.write_table_s": self.span_med("writers.write_table"),
-            "writers.files_written": _median([w[0] for w in self.written]),
-            "writers.bytes_written": _median([w[1] for w in self.written]),
-            "writers.gold_files": self.gold["files"],
-            "writers.gold_bytes_per_row": self.gold["bytes_per_row"],
-        })
-        return m
-
-
 class Serve(_Weather):
     """One closed-loop client calling the WSGI app in process over gold
-    persisted by write_table."""
+    persisted by write_table.
+
+    The run's seed draws the requests. Routes take turns and codes follow
+    Zipf's law (s = 1) over a seeded order, with a small share of unknown
+    codes that must answer 404: no request log exists to fit a mix to,
+    and the traced run reports each route on its own.
+    """
 
     name = "serve"
     op_name = "api.request"
-    ROUTES = (("postal", 0.5), ("latest", 0.25), ("forecast", 0.25))
+    rate = 3.0
+    ROUTES = ("postal", "latest", "forecast")
+    ZIPF_S = 1.0
     UNKNOWN_SHARE = 0.05
-    WARM_REQUESTS = 10
+    WARM_REQUESTS = 20
 
-    def prepare(self, spark) -> None:
-        super().prepare(spark)
-        self.tb = self.read_bronze(spark)
-        self.build_gold(spark)
+    def prepare(self, session) -> None:
+        self.sizes.update(self.use_history(session))
         con = _duck()
         g = _parquet_glob(self.gold_path())
-        ts = ASOF.isoformat(sep=" ")
+        ts = self.asof.isoformat(sep=" ")
         # codes every route answers for at the serve clock
         known = [r[0] for r in con.execute(f"""
             SELECT postal_code FROM {g} GROUP BY postal_code
@@ -453,18 +484,18 @@ class Serve(_Weather):
         rng = random.Random(self.seed)
         rng.shuffle(known)
         self.known = known
-        # Zipf-like popularity over a seeded order of the codes
-        self.weights = [1.0 / (k + 1) ** 1.1 for k in range(len(known))]
+        self.weights = [1.0 / (k + 1) ** self.ZIPF_S for k in range(len(known))]
         self.rng = rng
-        self.sizes["known_postal_codes"] = len(known)
+        self.gold = self.gold_stats()
+        self.sizes.update(known_postal_codes=len(known),
+                          gold_files=self.gold["files"])
         self.responses = []
-        self.traced_pairs: list[tuple[dict, dict]] = []
+        self.route = ""
 
     def load(self, spark) -> None:
         gold = writers.read_table(spark, self.lake, "gold", "weather")
-        self.sizes["gold_rows"] = gold.count()
-        self.gold_df = gold
-        self.app = create_app(spark, gold, asof_provider=lambda: ASOF)
+        asof = self.asof
+        self.app = create_app(spark, gold, asof_provider=lambda: asof)
 
     def warm(self, spark) -> None:
         # request latency keeps falling over the first few dozen calls of
@@ -472,12 +503,12 @@ class Serve(_Weather):
         # the measured draws do not depend on the warm-up
         rng = random.Random(-self.seed)
         for i in range(self.WARM_REQUESTS):
-            route = self.ROUTES[i % len(self.ROUTES)][0]
+            route = self.ROUTES[i % len(self.ROUTES)]
             self._call(f"/weather/{route}/{rng.choice(self.known)}")
 
     def draw(self) -> tuple[str, str, bool]:
-        route = self.rng.choices([r for r, _ in self.ROUTES],
-                                 [w for _, w in self.ROUTES])[0]
+        # routes in turn: the same mix in every run, whatever its length
+        route = self.ROUTES[len(self.responses) % len(self.ROUTES)]
         if self.rng.random() < self.UNKNOWN_SHARE:
             return route, "9%04d" % self.rng.randrange(10000), True
         return route, self.rng.choices(self.known, self.weights)[0], False
@@ -489,32 +520,35 @@ class Serve(_Weather):
             lambda s, h: status.append(int(s.split()[0]))))
         return status[0], body
 
-    def _direct(self, route: str, code: str):
-        if route == "postal":
-            df = q.weather_history(self.gold_df, code, "observation", ASOF, 24)
-        elif route == "latest":
-            df = q.latest_weather(self.gold_df, code)
-        else:
-            df = q.forecast_window(self.gold_df, code, ASOF, 48)
-        return df.collect()
-
     def op(self, spark):
         route, code, unknown = self.draw()
-        with self.t.span(self.op_name) as app_span:
+        self.route = route
+        with self.t.span(self.op_name):
             status, body = self._call(f"/weather/{route}/{code}")
         self.responses.append((route, code, unknown, status, body))
-        if self.t.enabled:
-            # the same query collected directly: the app's share is the
-            # difference
-            with self.t.span(f"queries.{route}") as query_span:
-                self._direct(route, code)
-            self.traced_pairs.append((app_span, query_span))
         if status != (404 if unknown else 200):
             raise RuntimeError(f"{route}/{code}: HTTP {status}")
 
+    @contextmanager
+    def traced(self):
+        """A span around the query each handler collects (the app's
+        ``_rows``), inside the request's span: the request's own time is
+        the app's overhead."""
+        saved = app_module._rows
+
+        def rows(df):
+            with self.t.span(f"queries.{self.route}"):
+                return saved(df)
+
+        app_module._rows = rows
+        try:
+            yield
+        finally:
+            app_module._rows = saved
+
     def _expected(self, con, route: str, code: str):
         g = _parquet_glob(self.gold_path())
-        ts = ASOF.isoformat(sep=" ")
+        ts = self.asof.isoformat(sep=" ")
         if route == "postal":
             cols = ("postal_code, timestamp, data_type, forecast_timestamp, "
                     "temperature_avg, temperature_min, temperature_max, "
@@ -572,49 +606,49 @@ class Serve(_Weather):
             m[f"queries.{label}_ms"] = _median([
                 self.t.duration(s) for s in self.t.named(f"queries.{route}")
             ]) * 1e3
-        per_req = [merge_stats(groups, [q_sp["id"]])
-                   for _, q_sp in self.traced_pairs]
+        per_req = [merge_stats(groups, self.t.subtree(r["id"]))
+                   for r in self.op_spans()]
         m["queries.files_per_req"] = _median([p["files_read"] for p in per_req])
         m["queries.bytes_read_per_req"] = _median(
             [p["input_bytes"] for p in per_req])
-        m["api.overhead_ms"] = _median([
-            self.t.duration(a) - self.t.duration(b)
-            for a, b in self.traced_pairs]) * 1e3
+        m["api.overhead_ms"] = _median(
+            [self.t.self_time(r) for r in self.op_spans()]) * 1e3
+        m["writers.gold_files"] = self.gold["files"]
+        m["writers.gold_bytes_per_row"] = self.gold["bytes_per_row"]
         return m
 
 
 class HourlyUpsert(_Weather):
     """Scheduler ticks on the transform DAG's cron: each lands one bronze
     hour, runs incremental_batch_run past the watermark with run_transform
-    over a short window, and upserts the result into gold."""
+    over a short window, and upserts the result into gold.
+
+    A run works on its own copy of the cached history; the observation
+    hours it lands are made from the run's seed. The warm pass is the
+    first tick.
+    """
 
     name = "hourly_upsert"
     op_name = "scheduler.tick"
+    rate = 0.2
 
-    def prepare(self, spark) -> None:
-        super().prepare(spark)
-        # more hours than any run can land: each set-up restarts from the
-        # first one, and a tick takes well over a quarter second
+    def prepare(self, session) -> None:
+        meta = self.use_history(session)
+        self.sizes.update(meta)
+        # ticks land bronze hours and rewrite gold partitions: use a copy
+        for d in ("bronze", "gold"):
+            shutil.copytree(os.path.join(self.lake, d),
+                            os.path.join(self.work, d))
+        self.bronze = os.path.join(self.work, "bronze")
+        self.lake = self.work
+        # more hours than a run lands: the warm tick and, traced or not,
+        # the measured ones
         self.n_hours = 8 + 4 * self.seconds
+        start = gen.BASE + dt.timedelta(hours=self.n_days * 24)
         self.hour_files = gen.write_observation_hours(
-            os.path.join(self.work, "staged_hours"), self.seed, N_STATIONS,
-            DAYS * 24, DAYS * 24 + self.n_hours)
-        # the first load, once; each set-up starts from a copy of it
-        self.tb = self.read_bronze(spark)
-        with self.layers.installed() if self.t.enabled else nullcontext():
-            self.build_gold(spark)
-        self.pristine = os.path.join(self.work, "gold_first_load")
-        shutil.copytree(self.lake, self.pristine)
-        self.gold0 = self.gold_stats()
-
-    def load(self, spark) -> None:
-        obs_dir = f"{self.bronze}/raw_weather_observations.parquet"
-        for p in glob.glob(f"{obs_dir}/landed-*.parquet"):
-            os.remove(p)
-        shutil.rmtree(self.lake, ignore_errors=True)
-        shutil.copytree(self.pristine, self.lake)
-        super().load(spark)
-        start = gen.BASE + dt.timedelta(hours=DAYS * 24)
+            os.path.join(self.work, "staged_hours"), self.seed,
+            self.n_stations, self.n_days * 24, self.n_days * 24 + self.n_hours,
+            geo_seed=self.DATA_SEED)
         self.now = start
         self.watermark = start - dt.timedelta(hours=1)
         self.landed = 0
@@ -626,6 +660,9 @@ class HourlyUpsert(_Weather):
                  self._transform_job, retries=0)],
             start=start - dt.timedelta(minutes=45),
             sleep=lambda s: None)
+
+    def load(self, spark) -> None:
+        self.tb = self.read_bronze(spark, self.bronze)
 
     def _transform_job(self, asof: dt.datetime) -> None:
         spark = self.spark
@@ -639,7 +676,7 @@ class HourlyUpsert(_Weather):
                         batch, n = self.layers._pin(batch)
                         sp["counts"]["rows"] = n
                     self.batch_rows.append(n)
-                res = self.transform(spark, batch,
+                res = self.transform(spark, self.tb, batch,
                                      self.tb["raw_weather_forecasts"], asof,
                                      TICK_LOOKBACK_H, TICK_LOOKBACK_H)
                 return res.gold
@@ -672,8 +709,11 @@ class HourlyUpsert(_Weather):
         self.touched.append(hour)
 
     def check(self, spark) -> None:
+        """The hours the ticks touched (the warm pass's too) against the
+        oracle over the bronze with the landed hours, and the row count:
+        the first load plus the touched rows, so no key was duplicated."""
         oracle = _oracle_module()
-        con = self.duck_bronze()
+        con = self.duck_bronze(self.bronze)
         last = self.touched[-1]
         lookback = len(self.touched) + 1
         want = [r for r in con.execute(oracle.gold_oracle_sql(
@@ -691,10 +731,11 @@ class HourlyUpsert(_Weather):
                     f"gold {dg[0]} rows, oracle {dw[0]} rows over "
                     f"{len(self.touched)} hours")
         self.gold = self.gold_stats()
+        first = self.sizes["first_load_rows"]
         self.record("hourly_upsert.no_duplicate_keys",
-                    self.gold["rows"] == self.gold0["rows"] + dg[0],
-                    f"gold {self.gold['rows']} rows = {self.gold0['rows']} "
-                    f"backfilled + {dg[0]} upserted")
+                    self.gold["rows"] == first + dg[0],
+                    f"gold {self.gold['rows']} rows = {first} first-load "
+                    f"+ {dg[0]} upserted")
         self.pairs.append(self.gold_pairs(
             con, f"timestamp = TIMESTAMP '{last.isoformat(sep=' ')}'"))
         con.close()
@@ -712,9 +753,8 @@ class HourlyUpsert(_Weather):
             "merge.rows_in": self.count_med("merge.input"),
             "merge.rows_out": self.count_med("merge.update_wins"),
             "writers.upsert_table_s": self.span_med("writers.upsert_table"),
-            # the first load, built once in prepare
-            "writers.write_table_s": _median([
-                self.t.duration(x) for x in self.t.named("writers.write_table")]),
+            # the first load's, cold, from when the history was built
+            "writers.write_table_s": self.sizes["write_table_s"],
             "writers.files_written": _median([f[0] for f in self.tick_files]),
             "writers.bytes_written": _median([f[1] for f in self.tick_files]),
             "writers.gold_files": self.gold["files"],
@@ -726,56 +766,69 @@ class HourlyUpsert(_Weather):
 
 
 class CatalogLeads(Workload):
-    """The ROADMAP-ranked catalog entries over seeded text/vector tables,
-    each written to the noop sink."""
+    """The ROADMAP's t26/pipe7 store-vs-delta join lead: one pass calls
+    both catalog entries over seeded 500-row documents/embeddings tables
+    and collects their rows, which the check compares with each entry's
+    ``oracle_sql()`` in DuckDB."""
 
     name = "catalog_leads"
     op_name = "catalog.pass"
+    rate = 0.2
+    LEADS = ("t26_incremental_bm25", "pipe7_retrieval_decontaminate")
 
-    def prepare(self, spark) -> None:
+    def prepare(self, session) -> None:
         from weather_data_pipeline_sv_spark.entry import oracle_sql, queries
 
         self.dir = os.path.join(self.work, "text")
         gen.write_text_tables(self.dir, self.seed)
         self.queries, self.oracles = queries(), oracle_sql()
+        self.outputs: list[dict] = []
 
     def load(self, spark) -> None:
         t = load_tables(spark, self.dir, "documents", "embeddings")
         self.sizes.update({n: df.count() for n, df in t.items()})
 
     def op(self, spark):
+        out = {}
         with self.t.span(self.op_name):
-            for e in CATALOG_LEADS:
+            for e in self.LEADS:
                 with self.t.span(f"catalog.{e}"):
-                    self.queries[e](spark, self.dir).write.format("noop") \
-                        .mode("overwrite").save()
+                    df = self.queries[e](spark, self.dir)
+                    out[e] = (list(df.columns), df.collect())
+        self.outputs.append(out)
+
+    @staticmethod
+    def _by_name(cols, rows) -> tuple[list, tuple[int, str]]:
+        order = sorted(range(len(cols)), key=lambda i: cols[i])
+        return (sorted(cols),
+                _digest([tuple(r[i] for i in order) for r in rows]))
 
     def check(self, spark) -> None:
         con = _duck()
         for n in ("documents", "embeddings"):
             con.execute(f"CREATE VIEW {n} AS SELECT * FROM "
                         f"read_parquet('{self.dir}/{n}.parquet')")
-        for e in CATALOG_LEADS:
-            df = self.queries[e](spark, self.dir)
-            cols = list(df.columns)
-            order = sorted(range(len(cols)), key=lambda i: cols[i])
-            got = _digest([tuple(r[i] for i in order) for r in df.collect()])
+        wrong = set()
+        for e in self.LEADS:
             res = con.execute(self.oracles[e])
-            dcols = [d[0] for d in res.description]
-            dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
-            want = _digest([tuple(r[i] for i in dorder) for r in res.fetchall()])
-            self.record(f"catalog.{e}", sorted(cols) == sorted(dcols)
-                        and got == want and want[0] > 0,
-                        f"spark {got[0]} rows, oracle {want[0]} rows")
+            want = self._by_name([d[0] for d in res.description],
+                                 res.fetchall())
+            bad = [i for i, out in enumerate(self.outputs)
+                   if self._by_name(*out[e]) != want]
+            wrong.update(bad)
+            self.record(f"catalog.{e}", not bad and want[1][0] > 0,
+                        f"{len(bad)} of {len(self.outputs)} passes differ, "
+                        f"oracle {want[1][0]} rows")
         con.close()
+        self.wrong_ops = len(wrong)
 
     def layer_metrics(self, groups) -> dict:
         m = {}
-        for e in CATALOG_LEADS:
+        for e in self.LEADS:
             m[f"catalog.{e}_s"] = self.span_med(f"catalog.{e}")
             m[f"catalog.{e}.shuffle_bytes"] = self.stats_med(
                 groups, f"catalog.{e}", "shuffle_write_bytes")
         return m
 
 
-WORKLOADS = {w.name: w for w in (Backfill, Serve, HourlyUpsert, CatalogLeads)}
+WORKLOADS = {w.name: w for w in (Serve, HourlyUpsert, CatalogLeads)}
