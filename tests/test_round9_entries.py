@@ -116,51 +116,6 @@ def test_cap_inert_below_threshold(spark, adversarial_chunks):
 
 
 # ---------------------------------------------------------------------------
-# Auto-selector decision cost (round-8 verdict #5): the windowed-fact
-# size comes from parquet footer stats, not a scan job.
-# ---------------------------------------------------------------------------
-def test_windowed_points_upper_bound(spark, tmp_path):
-    import datetime as dt
-
-    from weather_data_pipeline_sv_spark.plans.aggregation import (
-        _windowed_points_upper_bound,
-    )
-
-    base = dt.datetime(2026, 1, 1)
-    src = str(tmp_path / "fact")
-    df = (
-        spark.range(2400)
-        .select(
-            (
-                F.lit(base)
-                + F.make_interval(hours=(F.col("id") / 10).cast("int"))
-            ).cast("timestamp_ntz").alias("ts"),
-            F.col("id").alias("v"),
-        )
-    )
-    # chronological layout (the writers' fact convention)
-    df.repartitionByRange(8, "ts").sortWithinPartitions("ts").write.parquet(
-        src
-    )
-    fact = spark.read.parquet(src)
-    cutoff = base + dt.timedelta(hours=200)  # last 40 of 240 hours
-    exact = fact.filter(F.col("ts") >= F.lit(cutoff)).count()
-    bound = _windowed_points_upper_bound(fact, "ts", cutoff)
-    assert bound is not None
-    assert exact <= bound <= 2400
-    # chronological row groups make the bound TIGHT: well under total
-    assert bound < 2400 * 0.5
-    # a cutoff past the data: bound is 0 (no row group reaches it)
-    assert _windowed_points_upper_bound(
-        fact, "ts", base + dt.timedelta(hours=10_000)
-    ) == 0
-    # graceful fallbacks: in-memory frame (no files), missing column
-    mem = spark.createDataFrame([(base, 1)], "ts timestamp_ntz, v long")
-    assert _windowed_points_upper_bound(mem, "ts", cutoff) is None
-    assert _windowed_points_upper_bound(fact, "nope", cutoff) is None
-
-
-# ---------------------------------------------------------------------------
 # Hybrid serving stack: the persisted composition (t29) must answer
 # IDENTICALLY to the in-memory composition (t28) — the same proof the
 # shared oracle makes at sweep time, pinned here so plain pytest

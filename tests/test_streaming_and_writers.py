@@ -86,6 +86,41 @@ def test_stream_hourly_rollup_to_gold(spark, tmp_path):
     assert rows[("S1", H(-2))]["temperature_avg"] == 20.0
 
 
+def test_stream_to_gold_uri_path_and_interrupted_swap(spark, tmp_path):
+    """Gold given as a ``file://`` URI: the second batch merges through
+    the Hadoop-FS swap, not local-path calls. Then a swap that crashed
+    between its two renames (gold absent, the whole old copy at
+    ``gold.replaced``) is restored by the next batch, which merges into
+    it instead of starting gold over from the batch alone."""
+    land = tmp_path / "landing"
+    gold_dir = tmp_path / "gold"
+    gold, ckpt = gold_dir.as_uri(), str(tmp_path / "ckpt")
+
+    def run_batch(rows):
+        spark.createDataFrame(rows, schemas.RAW_WEATHER_OBSERVATIONS).write.parquet(
+            str(land), mode="append"
+        )
+        stream_to_gold(
+            stream_hourly_rollup(
+                read_observation_stream(spark, str(land), schemas.RAW_WEATHER_OBSERVATIONS)
+            ),
+            gold, ckpt,
+        ).awaitTermination(120)
+        return {(r["station_id"], r["hour_ts"]): r["n_rows"]
+                for r in spark.read.parquet(gold).collect()}
+
+    assert run_batch([_obs("S1", H(-2), 10.0), _obs("S2", H(-1), 5.0)]) == {
+        ("S1", H(-2)): 1, ("S2", H(-1)): 1}
+    got = run_batch([_obs("S1", H(-2) + dt.timedelta(minutes=30), 20.0)])
+    assert got == {("S1", H(-2)): 2, ("S2", H(-1)): 1}
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["ckpt", "gold", "landing"]
+
+    gold_dir.rename(tmp_path / "gold.replaced")  # the crash window
+    got = run_batch([_obs("S3", H(-1), 1.0)])
+    assert got == {("S1", H(-2)): 2, ("S2", H(-1)): 1, ("S3", H(-1)): 1}
+    assert not (tmp_path / "gold.replaced").exists()
+
+
 def test_writers_roundtrip_and_upsert(spark, tmp_path):
     root = str(tmp_path / "lake")
     rows = [_obs("S1", H(-30), 1.0), _obs("S1", H(-1), 2.0)]

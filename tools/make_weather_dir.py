@@ -16,8 +16,13 @@ stays reference-shaped (broadcastable), which is exactly the production
 growth pattern.
 
 Determinism: every value is an expression of the row id via the md5
-variate (operators/sampling.hash_uniform) — no rand(), no wall clock;
-regenerating a dir is bit-identical. Timestamps are NTZ anchored at a
+variate (operators/sampling.hash_uniform) — no rand(), no wall clock —
+and each fact table is written as ``FACT_FILES`` files whatever the
+core count, so a regenerated dir has the same rows in the same file and
+row-group layout on every host (only file names and writer metadata
+differ). The layout matters beyond speed: the spatial selector sizes
+the windowed fact from row-group footers, so a host-dependent file count
+could move its broadcast/grid decision. Timestamps are NTZ anchored at a
 fixed literal; the companion bench derives asof = BASE + days*24 h, so
 the 168 h lookback window always covers the last 7 days of data.
 
@@ -49,6 +54,8 @@ from weather_data_pipeline_sv_spark.session import get_spark
 BASE_TS = "2026-01-01 00:00:00"
 LAT0, LAT_SPAN = 51.5, 2.0
 LON0, LON_SPAN = 11.0, 4.0
+#: files per fact table (the committed data_wx1 layout)
+FACT_FILES = 32
 
 
 def _u(salt: str) -> F.Column:
@@ -123,7 +130,7 @@ def gen_observations(spark: SparkSession, n_stations: int, days: int):
     # parquet row-group min/max on timestamp lets the lookback filter
     # skip all but the window's tail (the BRIN-index intent, SURVEY X6)
     return (
-        spark.range(n)
+        spark.range(0, n, numPartitions=FACT_FILES)
         .withColumn("__sid", F.col("id") % n_stations)
         .withColumn("__h", (F.col("id") / n_stations).cast("long"))
         .select(
@@ -149,7 +156,7 @@ def gen_forecasts(spark: SparkSession, n_stations: int, days: int):
     base = F.to_timestamp(F.lit(BASE_TS)).cast("timestamp_ntz")
     per_day = n_stations * 12
     return (
-        spark.range(n)
+        spark.range(0, n, numPartitions=FACT_FILES)
         .withColumn("__day", (F.col("id") / per_day).cast("long"))
         .withColumn("__rem", F.col("id") % per_day)
         .withColumn("__sid", F.col("__rem") % n_stations)

@@ -6,23 +6,29 @@ weather dirs from tools/make_weather_dir.py:
 - ``wx_pipeline``            clean obs+fcst -> temporal check -> IDW
                              spatial aggregate -> gold union (the full
                              transform DAG body, `plans/pipeline.py`),
-                             broadcast spatial path, noop sink
-- ``wx_pipeline_grid``       identical pipeline on the X4 grid equi-join
-                             path (spatial_join='grid') — the broadcast/
-                             grid CROSSOVER evidence at each scale
-- ``wx_pipeline_auto``       the selector itself (round-8): must track
+                             broadcast spatial path forced, noop sink
+- ``wx_pipeline_grid``       identical pipeline with the X4 grid equi-join
+                             path forced — the broadcast/grid CROSSOVER
+                             evidence at each scale
+- ``wx_pipeline_auto``       the plain default, i.e. the size rule of
+                             plans/aggregation.py: must track
                              min(broadcast, grid) at every dir — picks
                              broadcast at wx1/wx10, grid (for the obs
                              side) at wx30 via the point-side
                              |points| x |centroids| crossover
 - ``wx_flagship_history``    the README flagship query: last-24h weather
                              for postal code 10115 (weather_history over
-                             the freshly computed gold — end to end from
-                             bronze, bounded 24-row collect)
+                             the freshly computed broadcast-path gold —
+                             end to end from bronze, bounded 24-row
+                             collect)
 - ``wx_latest_view_auto``    v_latest_observations (the reference view)
-  — the _auto suffix records the gold strategy in the KEY (round-10
-  ADVICE: the entry switched broadcast->auto in round 9, and a shared
-  key would let bench diffs compare different strategies as one name)
+  over the default gold — the _auto suffix records the gold strategy
+  in the KEY, so bench diffs never compare different strategies under
+  one name
+
+A path is forced by moving the size rule's two limits
+(``BROADCAST_MAX_CENTROIDS``, ``BROADCAST_MAX_PROBE_PAIRS``) while the
+plan is built; the engine has no option for it.
 
 Protocol: min over SPARK_GRAFT_BENCH_RUNS runs (default 3) per entry,
 matched process-tree CPU from the winning run (bench.py's estimator,
@@ -42,11 +48,12 @@ import datetime as dt
 import json
 import os
 import sys
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import measure_best
-from weather_data_pipeline_sv_spark.plans import schemas
+from weather_data_pipeline_sv_spark.plans import aggregation, schemas
 from weather_data_pipeline_sv_spark.plans.pipeline import run_transform
 from weather_data_pipeline_sv_spark.plans.queries import (
     v_latest_observations,
@@ -78,25 +85,46 @@ def asof_of(meta: dict) -> dt.datetime:
     return base + dt.timedelta(hours=meta["days"] * 24)
 
 
+@contextmanager
+def forced(path: str | None):
+    """Force the postal fan-out to "broadcast" or "grid" for plans built
+    inside the block by moving the size rule's limits; None keeps the
+    rule."""
+    saved = (aggregation.BROADCAST_MAX_CENTROIDS,
+             aggregation.BROADCAST_MAX_PROBE_PAIRS)
+    if path is not None:
+        limit = {"broadcast": 10**18, "grid": -1}[path]
+        aggregation.BROADCAST_MAX_CENTROIDS = limit
+        aggregation.BROADCAST_MAX_PROBE_PAIRS = limit
+    try:
+        yield
+    finally:
+        (aggregation.BROADCAST_MAX_CENTROIDS,
+         aggregation.BROADCAST_MAX_PROBE_PAIRS) = saved
+
+
+def gold_of(t: dict, path: str | None = None):
+    with forced(path):
+        return run_transform(
+            t["raw_weather_observations"], t["raw_weather_forecasts"],
+            t["weather_stations"], t["postal_codes"], asof_of(t["meta"]),
+        ).gold
+
+
 def entries(spark, t: dict) -> dict:
     asof = asof_of(t["meta"])
 
-    def gold(spatial: str):
-        return run_transform(
-            t["raw_weather_observations"], t["raw_weather_forecasts"],
-            t["weather_stations"], t["postal_codes"], asof,
-            spatial_join=spatial,
-        ).gold
+    def gold(path: str | None = None):
+        return gold_of(t, path)
 
     return {
         "wx_pipeline": lambda: gold("broadcast")
         .write.format("noop").mode("overwrite").save(),
         "wx_pipeline_grid": lambda: gold("grid")
         .write.format("noop").mode("overwrite").save(),
-        # the selector itself: must track min(broadcast, grid) at every
-        # dir — broadcast at wx1/wx10, grid at wx30 (the measured
-        # point-side crossover the auto heuristic now encodes)
-        "wx_pipeline_auto": lambda: gold("auto")
+        # the size rule itself: must track min(broadcast, grid) at every
+        # dir — broadcast at wx1/wx10, grid for obs at wx30
+        "wx_pipeline_auto": lambda: gold()
         .write.format("noop").mode("overwrite").save(),
         "wx_flagship_history": lambda: weather_history(
             gold("broadcast"), FLAGSHIP_PLZ, "observation", asof, 24
@@ -108,26 +136,20 @@ def entries(spark, t: dict) -> dict:
         # 10×→30× growth was the broadcast BNL's past-crossover
         # superlinearity — the selector, now metadata-priced, is the
         # scaler fix (grid at wx30: 45.7 vs 54.1 s measured)
-        "wx_latest_view_auto": lambda: v_latest_observations(gold("auto"))
+        "wx_latest_view_auto": lambda: v_latest_observations(gold())
         .write.format("noop").mode("overwrite").save(),
     }
 
 
 def plan_facts(spark, t: dict) -> dict:
-    asof = asof_of(t["meta"])
     # the scan line carries the file path inside a length-capped
     # metadata string (default 100 chars): a deeper checkout would
     # truncate 'raw_weather_observations' out of the line and fake a
     # pushdown regression — widen the cap for the plan render
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
 
-    def plan(spatial: str) -> str:
-        g = run_transform(
-            t["raw_weather_observations"], t["raw_weather_forecasts"],
-            t["weather_stations"], t["postal_codes"], asof,
-            spatial_join=spatial,
-        ).gold
-        return g._jdf.queryExecution().executedPlan().toString()
+    def plan(path: str) -> str:
+        return gold_of(t, path)._jdf.queryExecution().executedPlan().toString()
 
     b, g = plan("broadcast"), plan("grid")
     # the scan line carries path + PushedFilters together: require BOTH

@@ -308,8 +308,8 @@ def leakage_free_split(
     pair graph; split membership = the md5 variate of the cluster
     representative (deterministic, engine-replayable).
 
-    ``candidates`` selects the pair-generation strategy (the
-    ``spatial_join`` pattern — a purely physical switch):
+    ``candidates`` selects the pair-generation strategy (a purely
+    physical switch):
 
     - ``"naive"``: :func:`~..operators.dedup.jaccard_pairs` — the
       shared-shingle self-join, EXACT over capped shingles. Quadratic

@@ -53,8 +53,8 @@ def bucketed_range_join(
     caps as a single bucket upstream). A centroid past the limit RAISES
     at execution (a plan-embedded check — no extra driver job) rather
     than silently clamping its replication ring and dropping matches;
-    this covers every caller, including the weather pipeline's
-    ``spatial_join="grid"`` path.
+    this covers every caller, including the weather pipeline's grid
+    fan-out (``plans/aggregation.py::map_to_postal_codes``).
     """
     overlap = set(points.columns) & set(centroids.columns)
     if overlap:

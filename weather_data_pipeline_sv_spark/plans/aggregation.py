@@ -16,17 +16,17 @@ for MIN/MAX/COUNT but not the weighted means).
 Physical plan at scale: stations and postal_codes are small dims
 (README.md:16,139) ⇒ both joins broadcast; the only shuffle is the gold
 group-by, keyed on (postal_code, hour) — high cardinality, well spread.
-``spatial_join`` selects the fan-out strategy: "broadcast" (the
-reference-scale default — broadcast NL + haversine filter), "grid"
-(``operators/spatial.py::bucketed_range_join``, the X4 equi-join path
-for a postal dim too big to broadcast), or "auto" (count the small dim
-— one cheap job — and bound the windowed fact from parquet FOOTER
-stats, no data scanned; grid past ``BROADCAST_MAX_CENTROIDS`` on the
-dim side or ``BROADCAST_MAX_PROBE_PAIRS`` on the |points| x
-|centroids| product, both constants justified from the measured
-BENCH_WEATHER crossover).
-Both produce IDENTICAL pairs (pinned in tests/test_weather_pipeline);
-tools/wx_bench.py measures the crossover on the scaled weather dirs.
+The postal fan-out has two plans, each faster in its own regime: broadcast
+NL + haversine filter (reference scale), and the grid equi join
+(``operators/spatial.py::bucketed_range_join``) for a big fact or a
+postal dim too big to broadcast. ``map_to_postal_codes`` picks one per
+call from parquet FOOTER row counts of both sides (no Spark job; an
+exact count only for inputs that are not parquet files): grid past
+``BROADCAST_MAX_CENTROIDS`` on the dim side or
+``BROADCAST_MAX_PROBE_PAIRS`` on the |points| x |centroids| product.
+Both produce IDENTICAL pairs (pinned in tests/test_weather_pipeline),
+so the choice is purely physical; tools/wx_bench.py measures both paths
+on the scaled weather dirs.
 """
 
 from __future__ import annotations
@@ -45,21 +45,22 @@ RADIUS_KM = 50.0
 OBSERVATION = "observation"
 FORECAST = "forecast"
 
-#: "auto" switches the spatial fan-out from broadcast-NL to the grid
-#: equi join above this many postal centroids: 100k rows x ~40 B is a
-#: few MB serialized — safely under any executor/driver broadcast
-#: budget — while every row of a BNL probe pays O(dim) haversine work,
-#: so past ~1e5 centroids the bucketed join's selective cell key wins.
+#: The fan-out switches from broadcast-NL to the grid equi join above
+#: this many postal centroids: 100k rows x ~40 B is a few MB serialized
+#: — safely under any executor/driver broadcast budget — while every row
+#: of a BNL probe pays O(dim) haversine work, so past ~1e5 centroids the
+#: bucketed join's selective cell key wins.
 BROADCAST_MAX_CENTROIDS = 100_000
 
-#: The crossover also arrives on the POINT side (round-7 verdict #2):
-#: BNL probe cost is |points| x |centroids| haversine evaluations, so a
-#: big-enough fact beats the grid path's shuffle even with a tiny dim.
-#: Measured on the scaled weather dirs (BENCH_WEATHER.json, 900
-#: centroids): at wx10 the obs window is ~1.5e8 probe pairs and
-#: broadcast wins by 11% (27.9 vs 31.5 s); at wx30 it is ~4.1e8 pairs
-#: and GRID wins by 18% (96.7 vs 117.4 s). The threshold sits at the
-#: geometric midpoint of the two measured sides of the crossover.
+#: The crossover also arrives on the POINT side: BNL probe cost is
+#: |points| x |centroids| haversine evaluations, so a big-enough fact
+#: beats the grid path's shuffle even with a tiny dim. Measured on the
+#: scaled weather dirs (BENCH_WEATHER.json, 900 centroids, local[32]):
+#: at wx10 the obs window is ~1.5e8 probe pairs and broadcast wins
+#: (28.7 vs 35.3 s); at wx30 it is ~4.1e8 pairs and the obs side goes
+#: grid (selected 82.5 s vs all-broadcast 87.2 and all-grid 90.2 s); at
+#: wx100 grid wins outright (339.5 vs 388.4 s). The threshold sits at
+#: the geometric midpoint of the wx10 and wx30 obs windows.
 BROADCAST_MAX_PROBE_PAIRS = 250_000_000
 
 
@@ -83,43 +84,45 @@ def _session_tz(spark):
         return None
 
 
-def _windowed_points_upper_bound(
-    stg: DataFrame, filter_col: str, cutoff: dt.datetime
+def _footer_rows(
+    df: DataFrame,
+    filter_col: str | None = None,
+    cutoff: dt.datetime | None = None,
 ) -> int | None:
-    """Upper bound on the windowed fact's row count from parquet FOOTER
-    statistics — zero data scanned (round-8 verdict #5: the auto
-    selector's ``located.count()`` decision job cost ~6 s at the 30x
-    weather dir; this probe costs milliseconds).
+    """Row-count bound for ``df`` from parquet FOOTERS — zero data
+    scanned, no Spark job (a ``count()`` costs ~0.2 s even warm on a
+    900-row dim; this costs milliseconds).
 
-    Sums the rows of every row group whose max(``filter_col``) reaches
-    the lookback cutoff. Chronologically written fact tables (the
-    writers sort fact partitions by time; the test dirs are generated
-    that way) give a near-exact bound; a randomly laid-out table
-    degrades to the full count — still a valid upper bound, which only
-    ever errs toward the grid path (the safe choice at scale).
+    Without ``cutoff`` it sums the rows of every file behind the plan.
+    With one, it sums only the row groups whose max(``filter_col``)
+    reaches the cutoff: a bound on the windowed fact. Chronologically
+    written fact tables (the writers sort fact partitions by time; the
+    test dirs are generated that way) give a near-exact bound; a
+    randomly laid-out table degrades to the full count — still a valid
+    upper bound, which only ever errs toward the grid path (the safe
+    choice at scale). Filters and joins above the scan are ignored, so
+    this is an upper bound in the same direction.
 
-    Driver cost is bounded two ways (round-10 verdict #5): footers are
-    read in a thread pool (local footer reads are I/O waits, the GIL
-    releases), and past ``FOOTER_PROBE_MAX_FILES`` files an evenly-
-    strided sample is read and the included-row rate extrapolated by
-    file count. Beyond the cap the result is therefore a decision-grade
-    ESTIMATE rather than a strict bound — acceptable because at 10^5+
-    files the windowed fact dwarfs the probe-pairs budget unless the
-    window excludes nearly everything, and a chronological layout puts
-    the boundary within one stride of the truth. At or under the cap
-    the strict only-errs-toward-grid guarantee holds exactly as before.
+    Driver cost is bounded two ways: footers are read in a thread pool
+    where reads are slow, and past ``FOOTER_PROBE_MAX_FILES`` files an
+    evenly-strided sample is read and the included-row rate
+    extrapolated by file count. Beyond the cap the result is therefore a
+    decision-grade ESTIMATE rather than a strict bound — acceptable
+    because at 10^5+ files the fact dwarfs the probe-pairs budget
+    unless the window excludes nearly everything, and a chronological
+    layout puts the boundary within one stride of the truth.
 
     Instant-typed (tz-aware) statistics are rendered into the SESSION
     timezone before the naive comparison — a naive UTC strip under a
     host TZ ahead of UTC under-included row groups near the cutoff,
     silently erring toward broadcast, the unsafe side. Returns None —
-    caller falls back to the exact count — when the plan's leaves are
-    not local parquet files, the column is missing, stats are
-    unreadable, or the session zone cannot be resolved for an instant
-    column; the estimate is an OPTIMIZATION with a correctness-
-    preserving fallback, never a requirement."""
+    the caller falls back to an exact count — when the plan's leaves
+    are not local parquet files (in-memory or persisted frames), the
+    column is missing, stats are unreadable, or the session zone cannot
+    be resolved for an instant column. Both fan-out plans give the same
+    rows, so the bound only ever decides speed, never results."""
     try:
-        files = stg.inputFiles()
+        files = df.inputFiles()
     except Exception:
         return None
     if not files:
@@ -152,11 +155,13 @@ def _windowed_points_upper_bound(
             paths_sorted[int(i * stride)]
             for i in range(FOOTER_PROBE_MAX_FILES)
         ]
-    session_tz = _session_tz(stg.sparkSession)
+    session_tz = _session_tz(df.sparkSession)
 
     def probe_one(path: str) -> int:
         """Included-row count for one file; raises to abort the probe."""
         md = pq.read_metadata(path)
+        if cutoff is None:
+            return md.num_rows
         names = list(md.schema.names)
         if filter_col not in names:
             raise KeyError(filter_col)
@@ -232,13 +237,12 @@ def map_to_postal_codes(
     asof: dt.datetime,
     lookback_hours: int,
     issue_time_filter: bool,
-    spatial_join: str = "broadcast",
 ) -> DataFrame:
     """Steps 1-2: attach coordinates, fan out to postal codes within 50 km.
 
     ``issue_time_filter``: forecasts window on forecast_timestamp while
-    grouping on target_timestamp (quirk Q4).
-    ``spatial_join``: "broadcast" | "grid" | "auto" (see module doc).
+    grouping on target_timestamp (quirk Q4). The fan-out plan is picked
+    by the size rule in the module doc.
     """
     cutoff = ntz_lit(asof) - F.expr(f"INTERVAL {int(lookback_hours)} HOURS")
     filter_col = "forecast_timestamp" if issue_time_filter else time_field
@@ -258,46 +262,19 @@ def map_to_postal_codes(
     centroids = postal_codes.filter(
         F.col("centroid_lat").isNotNull()
     ).select("postal_code", "centroid_lat", "centroid_lon")
-    if spatial_join == "auto":
-        n_centroids = centroids.count()
-        if n_centroids > BROADCAST_MAX_CENTROIDS:
-            # dim side over the broadcast budget: grid regardless of
-            # fact size
-            spatial_join = "grid"
-        else:
-            # point-side crossover: BNL work is |points| x |centroids|
-            # haversines, so size the windowed fact too — from parquet
-            # footer stats (milliseconds, no data scanned; round-8
-            # verdict #5 measured the previous located.count() decision
-            # job at ~6 s at the 30x dir). The footer bound ignores the
-            # quality/join filters, so it only ever overestimates —
-            # erring toward grid, the safe side at scale. Falls back to
-            # the exact count when the plan's leaves aren't local
-            # parquet (e.g. in-memory test frames).
-            cutoff_dt = asof - dt.timedelta(hours=int(lookback_hours))
-            n_points = _windowed_points_upper_bound(
-                stg, filter_col, cutoff_dt
-            )
-            if n_points is None:
-                n_points = located.count()
-            spatial_join = (
-                "broadcast"
-                if n_points * n_centroids <= BROADCAST_MAX_PROBE_PAIRS
-                else "grid"
-            )
-    if spatial_join == "grid":
-        from ..operators.spatial import bucketed_range_join
 
-        # polar centroids (|lat| > the operator's max_abs_lat) RAISE at
-        # execution inside bucketed_range_join itself — a plan-embedded
-        # per-row check, so the grid path can never silently diverge
-        # from the broadcast path and no extra driver job is spent here
-        mapped = bucketed_range_join(
-            located, centroids, RADIUS_KM,
-            p_lat="latitude", p_lon="longitude",
-            c_lat="centroid_lat", c_lon="centroid_lon",
-        )
-    elif spatial_join == "broadcast":
+    n_centroids = _footer_rows(postal_codes)
+    if n_centroids is None:
+        n_centroids = centroids.count()
+    broadcast = n_centroids <= BROADCAST_MAX_CENTROIDS
+    if broadcast:
+        # point side: BNL work is |points| x |centroids| haversines
+        cutoff_dt = asof - dt.timedelta(hours=int(lookback_hours))
+        n_points = _footer_rows(stg, filter_col, cutoff_dt)
+        if n_points is None:
+            n_points = located.count()
+        broadcast = n_points * n_centroids <= BROADCAST_MAX_PROBE_PAIRS
+    if broadcast:
         dist = haversine_km(
             F.col("latitude"), F.col("longitude"),
             F.col("centroid_lat"), F.col("centroid_lon"),
@@ -308,9 +285,16 @@ def map_to_postal_codes(
             .filter(F.col("distance_km") <= RADIUS_KM)
         )
     else:
-        raise ValueError(
-            f"spatial_join must be 'broadcast', 'grid' or 'auto', "
-            f"got {spatial_join!r}"
+        from ..operators.spatial import bucketed_range_join
+
+        # polar centroids (|lat| > the operator's max_abs_lat) RAISE at
+        # execution inside bucketed_range_join itself — a plan-embedded
+        # per-row check, so the grid path can never silently diverge
+        # from the broadcast path and no extra driver job is spent here
+        mapped = bucketed_range_join(
+            located, centroids, RADIUS_KM,
+            p_lat="latitude", p_lon="longitude",
+            c_lat="centroid_lat", c_lon="centroid_lon",
         )
     return mapped.withColumn(
         "idw_weight",
@@ -326,7 +310,6 @@ def aggregate_to_postal_codes(
     data_type: str,
     asof: dt.datetime,
     lookback_hours: int | None = None,
-    spatial_join: str = "broadcast",
 ) -> DataFrame:
     """stg_{observations,forecasts} → analytics_weather_by_postal_code rows.
 
@@ -341,7 +324,7 @@ def aggregate_to_postal_codes(
 
     mapped = map_to_postal_codes(
         stg, stations, postal_codes, time_field, asof, lookback_hours,
-        issue_time_filter=is_fcst, spatial_join=spatial_join,
+        issue_time_filter=is_fcst,
     )
     if not is_fcst:
         # NULL::TIMESTAMP forecast_timestamp (aggregation.py:38)

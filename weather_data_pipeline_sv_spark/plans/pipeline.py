@@ -44,15 +44,13 @@ def run_transform(
     obs_lookback_hours: int = 168,
     fcst_lookback_hours: int = 48,
     validate: bool = False,
-    spatial_join: str = "broadcast",
 ) -> TransformResult:
     """One full transform run (both DAG branches + merge + barrier).
 
     ``existing_gold``: pass the current gold table for incremental
-    (ON CONFLICT-equivalent) behavior; None for a first load.
-    ``spatial_join``: fan-out strategy for the postal mapping —
-    "broadcast" (reference-scale default), "grid" (the X4 equi-join
-    path), or "auto" (size the dim and pick; see plans/aggregation.py).
+    (ON CONFLICT-equivalent) behavior; None for a first load. The
+    postal fan-out plan is picked per branch from input sizes (see
+    plans/aggregation.py).
     """
     stg_obs = clean_observations(raw_observations, asof, obs_lookback_hours)
     stg_fcst = clean_forecasts(raw_forecasts, asof, fcst_lookback_hours)
@@ -61,11 +59,11 @@ def run_transform(
 
     gold_obs = aggregate_to_postal_codes(
         stg_obs, stations, postal_codes, OBSERVATION, asof,
-        lookback_hours=obs_lookback_hours, spatial_join=spatial_join,
+        lookback_hours=obs_lookback_hours,
     )
     gold_fcst = aggregate_to_postal_codes(
         stg_fcst, stations, postal_codes, FORECAST, asof,
-        lookback_hours=fcst_lookback_hours, spatial_join=spatial_join,
+        lookback_hours=fcst_lookback_hours,
     )
     incoming = gold_obs.unionByName(gold_fcst)
 

@@ -80,7 +80,7 @@ def forecast_window(
     )
 
 
-def v_latest_observations(gold: DataFrame, pin: bool = True) -> DataFrame:
+def v_latest_observations(gold: DataFrame) -> DataFrame:
     """All postal codes at the single global max observation hour
     (schema.sql:312-328 — the reference view uses a GLOBAL max, not
     per-postal-code; replicated as a 1-row broadcast cross join — NEVER
@@ -90,10 +90,10 @@ def v_latest_observations(gold: DataFrame, pin: bool = True) -> DataFrame:
     filter branch), so when ``gold`` is a lazy transform plan rather
     than a materialized table, both branches recompute the post-shuffle
     side of the upstream pipeline (Spark's ReusedExchange already
-    de-duplicates the shuffle map side). ``pin`` (default) pins the
-    branch head via ``stage_cache`` so the second branch reads cached
-    blocks; result-invisible (oracle-checked), bounded by the view's
-    own input size (gold is postal x hour, already aggregated).
+    de-duplicates the shuffle map side). The branch head is pinned via
+    ``stage_cache`` so the second branch reads cached blocks;
+    result-invisible (oracle-checked), bounded by the view's own input
+    size (gold is postal x hour, already aggregated).
 
     ORDER MATTERS: the data_type filter and the COLUMN PRUNE both sit
     BEFORE the pin. A checkpoint materializes exactly the columns it is
@@ -103,8 +103,7 @@ def v_latest_observations(gold: DataFrame, pin: bool = True) -> DataFrame:
     (86.5 s vs the pipeline's own 84.3); pruning to the view's 8
     output columns first lets the aggregate itself shrink, and the
     data_type filter eliminates the forecast branch of the gold union
-    entirely. Pass ``pin=False`` when gold is a plain table read —
-    there the double scan is cheaper than a materialization."""
+    entirely."""
     from ..functions.caching import stage_cache
 
     obs = gold.filter(F.col("data_type") == "observation").select(
@@ -112,8 +111,7 @@ def v_latest_observations(gold: DataFrame, pin: bool = True) -> DataFrame:
         "wind_speed_avg", "cloud_cover_avg", "num_stations",
         "avg_quality_score",
     )
-    if pin:
-        obs = stage_cache(obs)
+    obs = stage_cache(obs)
     hi = obs.agg(F.max("timestamp").alias("__max_ts"))
     return (
         obs.crossJoin(F.broadcast(hi))
@@ -122,7 +120,7 @@ def v_latest_observations(gold: DataFrame, pin: bool = True) -> DataFrame:
     )
 
 
-def v_latest_forecasts(gold: DataFrame, pin: bool = True) -> DataFrame:
+def v_latest_forecasts(gold: DataFrame) -> DataFrame:
     """All rows of the most recent forecast issue (schema.sql:331-350).
     Same branch-pinning rationale (and prune-before-pin order) as
     :func:`v_latest_observations`."""
@@ -133,8 +131,7 @@ def v_latest_forecasts(gold: DataFrame, pin: bool = True) -> DataFrame:
         "temperature_avg", "precipitation_sum", "wind_speed_avg",
         "cloud_cover_avg", "num_stations",
     )
-    if pin:
-        fcst = stage_cache(fcst)
+    fcst = stage_cache(fcst)
     hi = fcst.agg(F.max("forecast_timestamp").alias("__max_issue"))
     return (
         fcst.crossJoin(F.broadcast(hi))

@@ -54,6 +54,24 @@ def atomic_rename_dir(spark: SparkSession, src: str, dst: str) -> bool:
     return True
 
 
+def restore_interrupted_swap(spark: SparkSession, dst: str) -> None:
+    """Undo the crash window of :func:`replace_dir`: when ``dst`` is
+    absent and ``dst.replaced`` exists, a swap crashed between its two
+    renames and the backup is the ONLY copy of the old state — rename it
+    back. A no-op otherwise. Readers that treat a missing ``dst`` as
+    "empty" must call this first, or they rebuild from nothing and the
+    next swap drops the backup as stale."""
+    jvm = spark._jvm
+    jdst = jvm.org.apache.hadoop.fs.Path(dst)
+    fs = jdst.getFileSystem(spark._jsc.hadoopConfiguration())
+    jbak = jvm.org.apache.hadoop.fs.Path(dst + ".replaced")
+    if not fs.exists(jdst) and fs.exists(jbak):
+        if not fs.rename(jbak, jdst):
+            raise IOError(
+                f"restore of interrupted swap {dst}.replaced -> {dst} failed"
+            )
+
+
 def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
     """Swap ``src`` over ``dst`` via BACKUP-rename, not delete-then-rename:
     ``dst`` → ``dst.replaced`` (atomic), ``src`` → ``dst`` (atomic), then
@@ -64,23 +82,15 @@ def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
     a swap must quiesce them; the incremental stores run migrations
     out-of-band); after the second the new state is live and only the
     backup cleanup remains. If a PREVIOUS swap crashed inside that
-    window (``dst`` absent, backup present), the backup is the sole
-    surviving copy: it is restored to ``dst`` before this swap proceeds,
-    never deleted — the caller may have (re)built ``src`` from the
-    missing ``dst``."""
+    window, the backup is restored to ``dst`` before this swap proceeds
+    (:func:`restore_interrupted_swap`), never deleted — the caller may
+    have (re)built ``src`` from the missing ``dst``. Paths may be plain
+    local paths or any Hadoop URI (``file://``, ``hdfs://``)."""
+    restore_interrupted_swap(spark, dst)
     jvm = spark._jvm
     jdst = jvm.org.apache.hadoop.fs.Path(dst)
     fs = jdst.getFileSystem(spark._jsc.hadoopConfiguration())
     jbak = jvm.org.apache.hadoop.fs.Path(dst + ".replaced")
-    if not fs.exists(jdst) and fs.exists(jbak):
-        # a previous swap crashed between its two renames: the backup is
-        # the ONLY copy of the old state. Restore it first — deleting it
-        # here would destroy that sole copy, and the caller may have
-        # derived `src` from the missing `dst` (i.e. from nothing).
-        if not fs.rename(jbak, jdst):
-            raise IOError(
-                f"restore of interrupted swap {dst}.replaced -> {dst} failed"
-            )
     if fs.exists(jdst):
         fs.delete(jbak, True)  # stale backup — dst is live, safe to drop
         if not fs.rename(jdst, jbak):

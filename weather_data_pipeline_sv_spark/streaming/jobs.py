@@ -20,11 +20,13 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.merge import merge_update_wins
+from ..sources.writers import replace_dir, restore_interrupted_swap
 
 
 def incremental_batch_run(
@@ -103,22 +105,20 @@ def stream_to_gold(
     watermark) overwrite their previous emission idempotently."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        import shutil
-
         spark = batch.sparkSession
+        restore_interrupted_swap(spark, output_path)
         try:
             existing = spark.read.parquet(output_path)
-        except Exception:
+        except AnalysisException:  # first batch: no gold yet
             batch.write.mode("overwrite").parquet(output_path)
             return
         merged = merge_update_wins(existing, batch, list(keys))
-        # can't overwrite a path while reading it lazily: stage + swap
-        # (at cluster scale this is the write-to-staging + atomic-rename
-        # pattern of X12; Delta MERGE would subsume it if available)
+        # can't overwrite a path while reading it lazily: stage, then the
+        # backup-rename swap (a crash at any point leaves a whole copy of
+        # gold, restored above by the next batch)
         staging = f"{output_path}.staging-{batch_id}"
         merged.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(output_path)
-        shutil.move(staging, output_path)
+        replace_dir(spark, staging, output_path)
 
     writer = (
         rollup.writeStream.outputMode("update")
